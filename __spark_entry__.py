@@ -2368,66 +2368,22 @@ def _q_media_features(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Entry ORDER is part of the driver contract: each round's
-    CORRECTNESS run records only the FIRST ~50 dict entries.  Rotated
-    for round 5: the 42 entries that have never had a driver row in
-    r01-r04 run FIRST (42 < 50, so one window retires the whole
-    backlog, with ~8 slots left for round-5 additions placed right
-    after them), then entries by staleness (r01-verified, r02, r03,
-    r04-freshest last)."""
+    CORRECTNESS run records only the FIRST ~50 dict entries.  Entries
+    run by staleness of their last CORRECTNESS row: ``temperature_mix``
+    (its oracle dtype fixed) and the entries never verified run FIRST,
+    then entries last verified in r01, r02, r03, r04, and r05
+    (freshest last) — so the 50-entry window holds those 6, all 13 r01
+    entries and the 31 stalest r02 entries.  New entries enter at the
+    front."""
     return {
-        # -- never driver-verified (no row in r01-r04): run FIRST ------------
-        "stratified_split": _q_stratified_split,
+        # -- temperature_mix (oracle dtype fixed) + never verified: run FIRST ------------
         "temperature_mix": _q_temperature_mix,
-        "ngram_term_query": _q_ngram_term,
-        "substring_search": _q_substring_search,
-        "xml_boolean_query": _q_xml_boolean,
-        "xml_dismax_query": _q_xml_dismax,
-        "xml_span_near": _q_xml_span_near,
-        "sampled_facets": _q_sampled_facets,
-        "fuzzy_like_this_terms": _q_flt_terms,
-        "fuzzy_like_this_topk": _q_flt_topk,
-        "domain_cap": _q_domain_cap,
-        "direct_spell": _q_direct_spell,
-        "chained_filter_xor": _q_chained_filter_xor,
-        "custom_score_query": _q_custom_score,
-        "scale_function_query": _q_scale_function,
-        "grouped_topk_expr": _q_grouped_topk_expr,
-        "hybrid_rrf": _q_hybrid_rrf,
-        "dsir_weights": _q_dsir_weights,
-        "exact_substr_spans": _q_exact_substr_spans,
-        "dsir_resample": _q_dsir_resample,
-        "pk_split_search": _q_pk_split_search,
-        "phrase_snippets": _q_phrase_snippets,
-        "time_limited_topk": _q_time_limited,
-        "semdedup": _q_semdedup,
-        "chunk_documents": _q_chunk_documents,
-        "term_freq_value": _q_term_freq_value,
-        "norm_value_query": _q_norm_value_query,
-        "check_index": _q_check_index,
-        "grouped_facets": _q_grouped_facets,
-        "confusion_matrix": _q_confusion_matrix,
-        "cluster_sample": _q_cluster_sample,
-        "embedding_contamination": _q_embedding_contamination,
-        "gopher_rules": _q_gopher_rules,
-        "c4_filters": _q_c4_filters,
-        "top_ngram_stats": _q_top_ngram_stats,
-        "standard_parse_query": _q_standard_parse,
-        "stemmed_term_query_de": _q_stemmed_term_de,
-        "stemmed_term_query_da": _q_stemmed_term_da,
-        "dfr_pl2_term_query": _q_dfr_pl2_term,
-        "dfr_dlz_term_query": _q_dfr_dlz_term,
-        "dfr_bel1_term_query": _q_dfr_bel1_term,
-        "spatial_polygon": _q_spatial_polygon,
-        # -- new in r5 (never driver-verified): inside the window ------------
-        "direct_spell_osa": _q_direct_spell_osa,
-        "fuzzy_terms_osa": _q_fuzzy_terms_osa,
-        "uax29_term_query": _q_uax29_term_query,
-        "uax29_mid_terms": _q_uax29_mid_terms,
-        "ja_term_query": _q_ja_term_query,
-        "zh_term_query": _q_zh_term_query,
-        "ja_phrase_query": _q_ja_phrase_query,
-        "fuzzy_osa_topk": _q_fuzzy_osa_topk,
-        # -- last verified in r01 (stale) ------------
+        "stemmed_term_query_pl": _q_stemmed_term_pl,
+        "opennlp_noun_term_query": _q_opennlp_noun_term,
+        "icu_translit_term_query": _q_translit_term_query,
+        "collation_sort_fr": _q_collation_sort_fr,
+        "collation_range_sv": _q_collation_range_sv,
+        # -- last verified in r01 (stalest) ------------
         "facet_counts": _q_facet,
         "filtered_query": _q_filtered,
         "numeric_range_query": _q_numeric_range,
@@ -2543,7 +2499,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "blended_infix_reciprocal": _q_blended_infix_reciprocal,
         "percolate": _q_percolate,
         "synonym_index_term": _q_synonym_index_term,
-        # -- last verified in r04 (freshest, run last) ------------
+        # -- last verified in r04 ------------
         "synonym_expand_or": _q_synonym_expand_or,
         "synonym_expand_phrase": _q_synonym_expand_phrase,
         "shingle_term_query": _q_shingle_term,
@@ -2594,11 +2550,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "common_grams_phrase": _q_common_grams_phrase,
         "lm_doc_quality": _q_lm_doc_quality,
         "pack_sequences": _q_pack_sequences,
-        "stemmed_term_query_pl": _q_stemmed_term_pl,
-        "opennlp_noun_term_query": _q_opennlp_noun_term,
-        "icu_translit_term_query": _q_translit_term_query,
-        "collation_sort_fr": _q_collation_sort_fr,
-        "collation_range_sv": _q_collation_range_sv,
+        # -- last verified in r05 (freshest, run last) ------------
+        "stratified_split": _q_stratified_split,
+        "ngram_term_query": _q_ngram_term,
+        "substring_search": _q_substring_search,
+        "xml_boolean_query": _q_xml_boolean,
+        "xml_dismax_query": _q_xml_dismax,
+        "xml_span_near": _q_xml_span_near,
+        "sampled_facets": _q_sampled_facets,
+        "fuzzy_like_this_terms": _q_flt_terms,
+        "fuzzy_like_this_topk": _q_flt_topk,
+        "domain_cap": _q_domain_cap,
+        "direct_spell": _q_direct_spell,
+        "chained_filter_xor": _q_chained_filter_xor,
+        "custom_score_query": _q_custom_score,
+        "scale_function_query": _q_scale_function,
+        "grouped_topk_expr": _q_grouped_topk_expr,
+        "hybrid_rrf": _q_hybrid_rrf,
+        "dsir_weights": _q_dsir_weights,
+        "exact_substr_spans": _q_exact_substr_spans,
+        "dsir_resample": _q_dsir_resample,
+        "pk_split_search": _q_pk_split_search,
+        "phrase_snippets": _q_phrase_snippets,
+        "time_limited_topk": _q_time_limited,
+        "semdedup": _q_semdedup,
+        "chunk_documents": _q_chunk_documents,
+        "term_freq_value": _q_term_freq_value,
+        "norm_value_query": _q_norm_value_query,
+        "check_index": _q_check_index,
+        "grouped_facets": _q_grouped_facets,
+        "confusion_matrix": _q_confusion_matrix,
+        "cluster_sample": _q_cluster_sample,
+        "embedding_contamination": _q_embedding_contamination,
+        "gopher_rules": _q_gopher_rules,
+        "c4_filters": _q_c4_filters,
+        "top_ngram_stats": _q_top_ngram_stats,
+        "standard_parse_query": _q_standard_parse,
+        "stemmed_term_query_de": _q_stemmed_term_de,
+        "stemmed_term_query_da": _q_stemmed_term_da,
+        "dfr_pl2_term_query": _q_dfr_pl2_term,
+        "dfr_dlz_term_query": _q_dfr_dlz_term,
+        "dfr_bel1_term_query": _q_dfr_bel1_term,
+        "spatial_polygon": _q_spatial_polygon,
+        "direct_spell_osa": _q_direct_spell_osa,
+        "fuzzy_terms_osa": _q_fuzzy_terms_osa,
+        "uax29_term_query": _q_uax29_term_query,
+        "uax29_mid_terms": _q_uax29_mid_terms,
+        "ja_term_query": _q_ja_term_query,
+        "zh_term_query": _q_zh_term_query,
+        "ja_phrase_query": _q_ja_phrase_query,
+        "fuzzy_osa_topk": _q_fuzzy_osa_topk,
     }
 
 

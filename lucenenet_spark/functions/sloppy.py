@@ -313,16 +313,19 @@ def sloppy_freq_2slot_encoded(
 
     Returns ``(docids, freqs_f32)`` for docs with freq > 0, docids
     ascending; the float32 fold order (event order per doc) matches
-    the walk bit-for-bit (round-k masked accumulation).
+    the walk bit-for-bit (round-k masked accumulation). Offsets must
+    fit the lane (``search.positional.lane_bias``).
     """
-    GUARD = np.int64(256)  # keeps raw_pos - offset + GUARD inside the lane
+    # lane bias B = max(0, r0, r1): raw_pos - offset + B >= 0, so no
+    # adjusted key borrows into the previous doc's lane
+    bias = np.int64(max(0, r0, r1))
     SHIFT = np.int64(32)
     MASK = (np.int64(1) << SHIFT) - np.int64(1)
     empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32))
     if u0.size == 0 or u1.size == 0:
         return empty
-    a = np.asarray(u0, dtype=np.int64) - np.int64(r0) + GUARD
-    b = np.asarray(u1, dtype=np.int64) - np.int64(r1) + GUARD
+    a = np.asarray(u0, dtype=np.int64) + (bias - np.int64(r0))
+    b = np.asarray(u1, dtype=np.int64) + (bias - np.int64(r1))
     winner = 0 if (r0, 0) < (r1, 1) else 1
 
     # ---- events: distinct adjusted keys, tag 0/1 single or BOTH

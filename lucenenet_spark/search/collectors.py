@@ -682,35 +682,15 @@ def span_near(
     earliest does). The UNORDERED count is a pinned simplification of
     NearSpansUnordered's queue walk (match set agrees; span
     multiplicity may differ around shared positions — documented).
-    Physical shape = the phrase positions join (one packed scan with
-    term IN pushdown, one groupBy(docid) shuffle). The term filter is
-    applied to the PACKED table BEFORE unpacking — a filter above the
-    unpack mapInPandas cannot push through the barrier and would
-    decode the entire index per query."""
-    from lucenenet_spark.index.builder import unpack_postings
+    Runs as the 2-clause SpanNearQuery of :func:`spans.span_query`
+    (the bucket positional kernel), whose per-start span count is this
+    spec exactly."""
+    from lucenenet_spark.search import spans as sp
 
-    pos = (
-        unpack_postings(
-            searcher.index.packed.where(F.col("term").isin([first, second]))
-        )
-        .select("docid", "term", F.explode("positions").alias("p"))
+    q = sp.SpanNearQuery(
+        (sp.SpanTermQuery(first), sp.SpanTermQuery(second)), slop, in_order
     )
-    a = pos.where(F.col("term") == first).select("docid", F.col("p").alias("pa"))
-    b = pos.where(F.col("term") == second).select("docid", F.col("p").alias("pb"))
-    if in_order:
-        cond = (F.col("pb") > F.col("pa")) & (
-            F.col("pb") - F.col("pa") - 1 <= slop
-        )
-    else:
-        cond = (F.col("pa") != F.col("pb")) & (
-            F.abs(F.col("pb") - F.col("pa")) - 1 <= slop
-        )
-    return (
-        a.join(b, "docid")
-        .where(cond)
-        .groupBy("docid")
-        .agg(F.count_distinct("pa").cast("long").alias("n_spans"))
-    )
+    return sp.span_query(searcher, q)
 
 
 def expression_topk(

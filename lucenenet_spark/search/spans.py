@@ -10,13 +10,13 @@ span-count spec* (documented per node below) instead of the
 reference's lazy iterator enumeration, so the result is
 SQL-oracle-mirrorable.
 
-Physical shape — the phrase scorer's: ONE packed scan filtered to all
-involved terms (parquet ``term IN`` pushdown BEFORE the unpack
-barrier), one ``groupBy(docid)`` positions shuffle, then a vectorized
-per-doc span enumeration inside a pandas UDF. A doc's span math is
-tiny (its own positions only); the distribution-heavy part — which
-docs hold which terms — stays declarative. Output: ``(docid,
-n_spans)`` for docs with >= 1 surviving span.
+Physical shape — the phrase scorer's bucket positional kernel
+(``search/positional.py``): ONE packed scan filtered to all involved
+terms (parquet ``term IN`` pushdown BEFORE the unpack barrier), one
+compressed-block shuffle by docid bucket, then per-doc span
+enumeration over the bucket's candidate docs inside the same
+``applyInPandas`` stage. A doc's span math is tiny (its own positions
+only). Output: ``(docid, n_spans)`` for docs with >= 1 surviving span.
 
 Pinned span spec (what ``n_spans`` counts):
 
@@ -57,6 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lucenenet_spark.search.positional import SHIFT, bucket_kernel
 from lucenenet_spark.search.queries import MultiTermQuery
 
 
@@ -315,199 +316,128 @@ def _required_slots(q: SpanQuery) -> list[list[str]]:
     return [sorted(set(q.terms()))]
 
 
-def _bucket_span_eval(searcher, q: SpanQuery, scored: bool, wf: float):
-    """Per-bucket block-grouped span evaluation — the phrase scorer's
-    physical shape (``searcher._phrase_bucket_scored``): ONE packed
-    scan filtered to the query's terms (parquet term-IN pushdown), ONE
-    narrow shuffle of the still-compressed blocks keyed by the
-    docid-disjoint bucket, then a single ``applyInPandas`` stage that
-    decodes docids, intersects the required-slot candidacy, decodes
-    POSITIONS only for blocks still holding a candidate (skip-list
-    skipping), and enumerates spans per doc. No decoded-positions
-    shuffle, no collect_list."""
-    from lucenenet_spark.functions.varbyte import (
-        decode_freqs,
-        decode_positions_flat,
-        delta_decode_docids,
-        gather_ranges,
-    )
+def _term_keys(keys: dict[str, list]) -> dict[str, np.ndarray]:
+    """One sorted doc-encoded key array per term. Blocks of one (term,
+    bucket) from DIFFERENT segments interleave docid ranges (a segment
+    owns several hash-placed docid ranges) — concatenation must be
+    sorted."""
+    return {
+        t: arrs[0] if len(arrs) == 1 else np.sort(np.concatenate(arrs))
+        for t, arrs in keys.items()
+    }
 
-    sim = searcher.sim
-    all_terms = sorted(set(q.terms()))
-    req = _required_slots(q)
-    blocks = searcher.index.packed.where(F.col("term").isin(all_terms)).select(
-        "term", "bucket", "block_id", "count",
-        "docs_enc", "freqs_enc", "norms_enc", "positions_enc",
-    )
-    if scored:
-        schema = "docid long, score float"
-        empty = pd.DataFrame(
-            {"docid": pd.array([], dtype="int64"),
-             "score": pd.array([], dtype="float32")}
-        )
-    else:
-        schema = "docid long, n_spans long"
-        empty = pd.DataFrame(
-            {"docid": pd.array([], dtype="int64"),
-             "n_spans": pd.array([], dtype="int64")}
-        )
-    qq = q
-    SHIFT = np.int64(1) << np.int64(32)
 
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["term", "block_id"])
-        term_blocks: dict[str, list] = {}
-        for term, de, fe, ne, pe in zip(
-            pdf["term"], pdf["docs_enc"], pdf["freqs_enc"],
-            pdf["norms_enc"], pdf["positions_enc"],
-        ):
-            term_blocks.setdefault(term, []).append(
-                (delta_decode_docids(bytes(de)), fe, ne, pe)
-            )
-        cand = None
-        for slot in req:
-            arrs = [b[0] for t in slot if t in term_blocks
-                    for b in term_blocks[t]]
-            if not arrs:
-                return empty
-            sd = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-            cand = sd if cand is None else np.intersect1d(
-                cand, sd, assume_unique=True
-            )
-            if cand.size == 0:
-                return empty
-        glob: dict[str, list] = {t: [] for t in term_blocks}
-        norms = np.zeros(cand.size, dtype=np.uint8)
-        for term, blks in term_blocks.items():
-            gl = glob[term]
-            for d, fe, ne, pe in blks:
-                lo = np.searchsorted(cand, d[0])
-                hi = np.searchsorted(cand, d[-1], side="right")
-                if lo == hi:
-                    continue
-                sub = cand[lo:hi]
-                idx = np.searchsorted(d, sub)
-                hit = d[idx] == sub
-                if not hit.any():
-                    continue
-                # freqs ARE the per-doc position counts: one flat
-                # vectorized prox decode + multi-range gather, no
-                # per-doc numpy calls (the old per-doc cumsum walk was
-                # the sf1 span bottleneck)
-                f = decode_freqs(bytes(fe)).astype(np.int64)
-                flat, starts = decode_positions_flat(bytes(pe), f)
-                nb = np.frombuffer(bytes(ne), dtype=np.uint8)
-                ci = np.flatnonzero(hit) + lo
-                bi = idx[hit]
-                norms[ci] = nb[bi]
-                lens = f[bi]
-                gl.append(
-                    np.repeat(cand[ci] * SHIFT, lens)
-                    + gather_ranges(flat, starts[bi], lens)
-                )
-        bases = cand * SHIFT
-        unions: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]] = []
-        for t, arrs in glob.items():
-            if not arrs:
-                continue
-            # blocks of one (term, bucket) from DIFFERENT segments
-            # interleave docid ranges (a segment owns several
-            # hash-placed docid ranges) — concatenation must be sorted
-            u = arrs[0] if len(arrs) == 1 else np.sort(np.concatenate(arrs))
-            unions.append(
-                (t, u, np.searchsorted(u, bases),
-                 np.searchsorted(u, bases + SHIFT))
-            )
-        # 2-term ordered fast walk (the phrase scorer's idiom): a
-        # valid start p1 is one whose MINIMAL same-doc successor
-        # p2 >= p1+1 satisfies p2 - p1 - 1 <= slop (greedy minimizes
-        # the chain end, so "greedy fits" <=> "some chain fits" —
-        # identical to _enumerate's per-start spec). One searchsorted
-        # over the doc-encoded global position arrays replaces the
-        # per-doc Python loop; n_spans = valid starts per doc.
-        if (
-            not scored
-            and isinstance(qq, SpanNearQuery)
-            and qq.in_order
-            and len(qq.clauses) == 2
-            and all(isinstance(c, SpanTermQuery) for c in qq.clauses)
-        ):
-            tu = {t: u for t, u, _, _ in unions}
-            g1 = tu.get(qq.clauses[0].term)
-            g2 = tu.get(qq.clauses[1].term)
-            if g1 is None or g2 is None or g1.size == 0 or g2.size == 0:
-                return empty
+def _doc_spans(q: SpanQuery, cand: np.ndarray, keys: dict[str, list]):
+    """Yield ``(j, spans)`` for every candidate doc ``cand[j]`` with >= 1
+    span, slicing each doc's positions out of the bucket's key arrays
+    (slice bounds for ALL docs at once)."""
+    bases = cand * SHIFT
+    unions = [
+        (t, u, np.searchsorted(u, bases), np.searchsorted(u, bases + SHIFT))
+        for t, u in _term_keys(keys).items()
+    ]
+    for j in range(cand.size):
+        posmap = {}
+        for t, u, los, his in unions:
+            lo, hi = los[j], his[j]
+            if lo < hi:
+                posmap[t] = u[lo:hi] - bases[j]
+        spans = _enumerate(q, posmap)
+        if len(spans):
+            yield j, spans
+
+
+def _span_count_evaluator(q: SpanQuery):
+    """Per-bucket evaluator -> ``(docid, n_spans)``."""
+    if (
+        isinstance(q, SpanNearQuery)
+        and q.in_order
+        and len(q.clauses) == 2
+        and all(isinstance(c, SpanTermQuery) for c in q.clauses)
+    ):
+        t1, t2, slop = q.clauses[0].term, q.clauses[1].term, q.slop
+
+        def ordered_pair(cand, norms, keys):
+            # 2-term ordered fast walk (the phrase scorer's idiom): a
+            # valid start p1 is one whose MINIMAL same-doc successor
+            # p2 >= p1+1 satisfies p2 - p1 - 1 <= slop (greedy minimizes
+            # the chain end, so "greedy fits" <=> "some chain fits" —
+            # identical to _enumerate's per-start spec). One searchsorted
+            # over the doc-encoded key arrays replaces the per-doc
+            # Python loop; n_spans = valid starts per doc.
+            if t1 not in keys or t2 not in keys:
+                return None
+            tk = _term_keys({t: keys[t] for t in (t1, t2)})
+            g1, g2 = tk[t1], tk[t2]
             nxt = np.searchsorted(g2, g1 + 1)
             ok = nxt < g2.size
             p2 = g2[np.minimum(nxt, g2.size - 1)]
-            valid = (
-                ok
-                & ((p2 // SHIFT) == (g1 // SHIFT))
-                & (p2 - g1 - 1 <= qq.slop)
-            )
+            valid = ok & ((p2 // SHIFT) == (g1 // SHIFT)) & (p2 - g1 - 1 <= slop)
             if not valid.any():
-                return empty
+                return None
             vd, vc = np.unique(g1[valid] // SHIFT, return_counts=True)
             return pd.DataFrame(
                 {"docid": vd.astype(np.int64), "n_spans": vc.astype(np.int64)}
             )
 
-        docs_out: list[int] = []
-        vals: list = []
-        for j, doc in enumerate(cand):
-            posmap = {}
-            for t, u, los, his in unions:
-                lo, hi = los[j], his[j]
-                if lo < hi:
-                    posmap[t] = u[lo:hi] - bases[j]
-            spans = _enumerate(qq, posmap)
-            n = len(spans)
-            if n == 0:
-                continue
-            if scored:
-                # SpanScorer.SetFreqCurrentDoc: float32 ordered sum of
-                # 1/(1 + matchLength) over spans in enumeration order
-                acc = np.float32(0.0)
-                for s, e in spans:
-                    acc = np.float32(
-                        acc + np.float32(1.0) / np.float32(1 + (e - s))
-                    )
-                vals.append((acc, norms[j]))
-            else:
-                vals.append(n)
-            docs_out.append(int(doc))
-        if not docs_out:
-            return empty
-        if scored:
-            freqs = np.array([v[0] for v in vals], dtype=np.float32)
-            nrm = np.array([v[1] for v in vals], dtype=np.uint8)
-            s = sim.score(freqs, nrm, np.float32(wf))
-            return pd.DataFrame(
-                {"docid": np.asarray(docs_out, dtype=np.int64),
-                 "score": s.astype(np.float32)}
-            )
+        return ordered_pair
+
+    def enumerate_all(cand, norms, keys):
+        out = [(cand[j], len(spans)) for j, spans in _doc_spans(q, cand, keys)]
+        if not out:
+            return None
+        docs, counts = zip(*out)
         return pd.DataFrame(
-            {"docid": np.asarray(docs_out, dtype=np.int64),
-             "n_spans": np.asarray(vals, dtype=np.int64)}
+            {"docid": np.asarray(docs, dtype=np.int64),
+             "n_spans": np.asarray(counts, dtype=np.int64)}
         )
 
-    return blocks.repartition(199, "bucket").groupBy("bucket").applyInPandas(
-        lambda pdf: apply_fn(pdf), schema
-    )
+    return enumerate_all
+
+
+def _span_scored_evaluator(q: SpanQuery, sim, wf: float):
+    """Per-bucket evaluator -> ``(docid, score)``: SpanScorer's freq
+    through the similarity."""
+    w32 = np.float32(wf)
+
+    def evaluate(cand, norms, keys):
+        docs, freqs, nrm = [], [], []
+        for j, spans in _doc_spans(q, cand, keys):
+            # SpanScorer.SetFreqCurrentDoc: float32 ordered sum of
+            # 1/(1 + matchLength) over spans in enumeration order
+            acc = np.float32(0.0)
+            for s, e in spans:
+                acc = np.float32(acc + np.float32(1.0) / np.float32(1 + (e - s)))
+            docs.append(cand[j])
+            freqs.append(acc)
+            nrm.append(norms[j])
+        if not docs:
+            return None
+        s = sim.score(
+            np.array(freqs, dtype=np.float32), np.array(nrm, dtype=np.uint8), w32
+        )
+        return pd.DataFrame(
+            {"docid": np.asarray(docs, dtype=np.int64), "score": s.astype(np.float32)}
+        )
+
+    return evaluate
 
 
 def span_query(searcher, q: SpanQuery) -> DataFrame:
     """Evaluate a span query -> (docid, n_spans), n_spans >= 1.
 
-    Physical shape = the per-bucket block-grouped plan
-    (:func:`_bucket_span_eval`): one packed scan with term-IN
+    Physical shape = the bucket positional kernel
+    (``search/positional.py``): one packed scan with term-IN
     pushdown, one compressed-block shuffle, per-doc numpy span
     enumeration inside the bucket group."""
     q = _expand_multi(q, searcher)
     terms = sorted(set(q.terms()))
     if not terms:
         return _empty(searcher)
-    return _bucket_span_eval(searcher, q, scored=False, wf=1.0)
+    return bucket_kernel(
+        searcher, terms, _required_slots(q), _span_count_evaluator(q),
+        "docid long, n_spans long",
+    )
 
 
 def span_query_scored(searcher, q: SpanQuery, k: int | None = 10) -> DataFrame:
@@ -522,8 +452,8 @@ def span_query_scored(searcher, q: SpanQuery, k: int | None = 10) -> DataFrame:
     ``sim.score(freq, norm, weight)`` — so a SpanNearQuery ranks like
     a proximity-weighted phrase. Output (docid, score) top-k.
 
-    Physical shape = the per-bucket block-grouped plan
-    (:func:`_bucket_span_eval`)."""
+    Physical shape = the bucket positional kernel, as
+    :func:`span_query`."""
     q = _expand_multi(q, searcher)
     terms = sorted(set(q.terms()))
     if not terms:
@@ -537,7 +467,11 @@ def span_query_scored(searcher, q: SpanQuery, k: int | None = 10) -> DataFrame:
     w = searcher.sim.weight_multi(
         [stats.get(t, (0, 0))[0] for t in terms], searcher.index.max_doc, 1.0
     )
-    scored = _bucket_span_eval(searcher, q, scored=True, wf=float(w))
+    scored = bucket_kernel(
+        searcher, terms, _required_slots(q),
+        _span_scored_evaluator(q, searcher.sim, float(w)),
+        "docid long, score float",
+    )
     out = scored.orderBy(F.col("score").desc(), F.col("docid").asc())
     return out.limit(k) if k is not None else out
 

@@ -23,6 +23,7 @@ from lucenenet_spark.search import spans as sp
 from lucenenet_spark.search.queries import (
     BooleanQuery,
     FuzzyQuery,
+    MultiPhraseQuery,
     Occur,
     PhraseQuery,
     TermQuery,
@@ -35,6 +36,11 @@ PYTHON = re.compile(r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGrou
 
 
 def shapes(searcher: IndexSearcher) -> dict[str, tuple[int, int]]:
+    near = sp.SpanNearQuery(
+        (sp.SpanTermQuery("return"), sp.SpanTermQuery("value")),
+        slop=2,
+        in_order=True,
+    )
     qs = {
         "term_query": searcher.search_df(TermQuery(term="return"), 10),
         "bool_and": searcher.search_df(
@@ -47,15 +53,15 @@ def shapes(searcher: IndexSearcher) -> dict[str, tuple[int, int]]:
         "phrase": searcher.search_df(
             PhraseQuery(phrase_terms=("return", "value")), 10
         ),
-        "fuzzy_osa": searcher.search_df(FuzzyQuery(term="return"), 10),
-        "span_near": sp.span_query(
-            searcher,
-            sp.SpanNearQuery(
-                (sp.SpanTermQuery("return"), sp.SpanTermQuery("value")),
-                slop=2,
-                in_order=True,
-            ),
+        "sloppy_phrase": searcher.search_df(
+            PhraseQuery(phrase_terms=("return", "value"), slop=2), 10
         ),
+        "multi_phrase": searcher.search_df(
+            MultiPhraseQuery(slots=(("return",), ("value", "self"))), 10
+        ),
+        "fuzzy_osa": searcher.search_df(FuzzyQuery(term="return"), 10),
+        "span_near": sp.span_query(searcher, near),
+        "span_near_scored": sp.span_query_scored(searcher, near, 10),
     }
     out = {}
     for name, df in qs.items():

@@ -12,7 +12,7 @@ import pytest
 from lucenenet_spark.functions.sloppy import sloppy_phrase_freq
 from lucenenet_spark.oracle import OracleSearcher
 from lucenenet_spark.search.parser import parse_query
-from lucenenet_spark.search.queries import PhraseQuery
+from lucenenet_spark.search.queries import MultiPhraseQuery, PhraseQuery
 from lucenenet_spark.search.searcher import IndexSearcher
 
 
@@ -121,25 +121,77 @@ def test_infinite_freq_regressions_are_finite():
     assert np.isfinite(val) and 0.0 <= val < 10.0
 
 
-def test_phrase_bucket_path_matches_flat_path(spark_index, oracle_index):
-    """The per-bucket block-grouped phrase scorer (packed path: docid
-    conjunction + skip-list position decode + vectorized/PQ freq inside
-    one applyInPandas) must be bit-identical to the flat-postings path
-    (use_packed=False: explode + groupBy(docid) + per-doc UDF) — two
-    independent implementations of the same reference semantics."""
-    from lucenenet_spark.search.queries import MultiPhraseQuery
-
-    plain = IndexSearcher(spark_index)
-    forced = IndexSearcher(spark_index, use_packed=False)
+def test_phrase_bucket_path_matches_oracle(spark_index, oracle_index):
+    """The bucket positional kernel (docid conjunction + skip-list
+    position decode + vectorized/PQ freq inside one applyInPandas) must
+    be bit-identical to the independent pure-Python OracleSearcher on
+    exact, sloppy and multi-phrase queries."""
+    spark_s = IndexSearcher(spark_index)
+    oracle_s = OracleSearcher(oracle_index)
     queries = [
         PhraseQuery(phrase_terms=("return", "value")),
         PhraseQuery(phrase_terms=("return", "value"), slop=2),
         MultiPhraseQuery(slots=(("return",), ("value", "self"))),
     ]
     for q in queries:
-        a = [(h.docid, h.score) for h in plain.search(q, 10)]
-        b = [(h.docid, h.score) for h in forced.search(q, 10)]
+        a = [(h.docid, h.score) for h in spark_s.search(q, 10)]
+        b = [(d, float(sc)) for d, sc in oracle_s.search(q, 10)]
         assert a == b and a, q
+
+
+LANE_DOCS = [
+    "alpha beta gamma",
+    "beta alpha gamma delta",
+    "gamma x y alpha beta",
+    "alpha alpha alpha beta gamma",
+]
+
+
+@pytest.fixture(scope="module")
+def lane_searchers(spark):
+    from lucenenet_spark.index.builder import CorpusSpec, build_index
+    from lucenenet_spark.oracle import build_oracle_index
+
+    rows = [("r", f"p{i}", "c", t) for i, t in enumerate(LANE_DOCS)]
+    df = spark.createDataFrame(rows, "repo string, path string, commit string, content string")
+    idx = build_index(spark, df, CorpusSpec(order_cols=("repo", "path", "commit")))
+    return IndexSearcher(idx), OracleSearcher(build_oracle_index(LANE_DOCS))
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        PhraseQuery(phrase_terms=("alpha", "beta"), term_positions=(0, 300), slop=400),
+        PhraseQuery(phrase_terms=("alpha", "beta"), term_positions=(300, 0), slop=400),
+        PhraseQuery(
+            phrase_terms=("alpha", "beta", "gamma"), term_positions=(300, 0, 1), slop=400
+        ),
+        MultiPhraseQuery(
+            slots=(("alpha",), ("beta", "x"), ("gamma",)),
+            term_positions=(300, 0, 1),
+            slop=400,
+        ),
+    ],
+    ids=["2slot_0_300", "2slot_300_0", "walk_3slot", "multiphrase_3slot"],
+)
+def test_large_offsets_do_not_borrow_across_doc_lanes(lane_searchers, q):
+    """Phrase offsets larger than a raw position must not borrow into
+    the previous doc's docid·2³² + pos lane (the shared kernel biases
+    every shifted key by max(0, *offsets))."""
+    s, o = lane_searchers
+    got = [(h.docid, h.score) for h in s.search(q, 10)]
+    expect = [(d, float(sc)) for d, sc in o.search(q, 10)]
+    assert got == expect and got
+
+
+def test_offsets_outside_the_lane_raise(lane_searchers):
+    s, _ = lane_searchers
+    for q in (
+        PhraseQuery(phrase_terms=("alpha", "beta"), term_positions=(0, 2**31)),
+        MultiPhraseQuery(slots=(("alpha",), ("beta",)), term_positions=(-(2**31), 0), slop=1),
+    ):
+        with pytest.raises(ValueError, match="lane"):
+            s.search_df(q, 10)
 
 
 def test_sloppy_rank_and_score_identical_to_oracle(spark_index, oracle_index):

@@ -238,10 +238,10 @@ def test_span_query_scored_matches_bruteforce(searcher, oracle_index):
 
 
 def test_span_plans_filter_packed_before_unpack(searcher):
-    """VERDICT r2 'what's wrong' #1 regression: the span paths must
-    filter the PACKED table (term pushdown) before the unpack
-    barrier — the physical plan's scan-side filter carries the
-    term IN predicate below the mapInPandas."""
+    """VERDICT r2 'what's wrong' #1 regression: the span and phrase
+    paths must filter the PACKED table (term pushdown) before the
+    unpack barrier — the physical plan's scan-side filter carries the
+    term IN predicate below the one python stage."""
     from lucenenet_spark.search import collectors as coll
 
     def has_term_filter(plan: str) -> int:
@@ -259,19 +259,31 @@ def test_span_plans_filter_packed_before_unpack(searcher):
     )
     assert has_term_filter(plan) >= 0, plan
 
-    # grouped-map span plan: ONE python stage, term filter BELOW it
-    # (deeper nodes print later), and at most one shuffle
-    plan = (
-        sp.span_query(
-            searcher,
-            sp.SpanNearQuery(
-                (sp.SpanTermQuery("return"), sp.SpanTermQuery("value")), 3, True
-            ),
-        )
-        ._jdf.queryExecution().executedPlan().toString()
+    # every shape of the shared bucket positional kernel: ONE grouped-map
+    # python stage, term filter BELOW it (deeper nodes print later)
+    from lucenenet_spark.search.queries import MultiPhraseQuery, PhraseQuery
+
+    near = sp.SpanNearQuery(
+        (sp.SpanTermQuery("return"), sp.SpanTermQuery("value")), 3, True
     )
-    assert "FlatMapGroupsInPandas" in plan, plan
-    assert plan.find("FlatMapGroupsInPandas") < has_term_filter(plan), plan
+    shapes = {
+        "exact_phrase": searcher.search_df(
+            PhraseQuery(phrase_terms=("return", "value")), 10
+        ),
+        "sloppy_phrase": searcher.search_df(
+            PhraseQuery(phrase_terms=("return", "value"), slop=2), 10
+        ),
+        "multi_phrase": searcher.search_df(
+            MultiPhraseQuery(slots=(("return",), ("value",))), 10
+        ),
+        "span_query": sp.span_query(searcher, near),
+        "span_query_scored": sp.span_query_scored(searcher, near, 10),
+    }
+    for name, df in shapes.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FlatMapGroupsInPandas") == 1, (name, plan)
+        assert 0 <= plan.find("FlatMapGroupsInPandas") < has_term_filter(plan), (
+            name, plan)
     # (the one-Exchange property holds on a persisted warehouse; the
     # cached fixture's plan also prints the build lineage's shuffles)
 
